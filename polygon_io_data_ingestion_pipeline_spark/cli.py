@@ -343,6 +343,72 @@ def cmd_clftrain(args: argparse.Namespace) -> int:
     return 0
 
 
+class _ObservedRun:
+    """Accounting and cache scope of one ``corpus`` run.
+
+    Figures are ``DataFrame.observe`` metrics on frames the final write
+    consumes in full, read after the write.  An observation reports the
+    first action that runs it, so none may sit under a ``limit``, on a
+    side branch, or in an earlier action that reads part of its input.
+    Frames cached through :meth:`cache` are released on exit.  AQE's
+    empty-relation rule is off meanwhile: once a stage comes back empty
+    it drops the subtrees beside it, observations included, and those
+    complete without metrics (a corpus the gate empties would lose its
+    read count)."""
+
+    _RULES = "spark.sql.adaptive.optimizer.excludedRules"
+    _EMPTY = "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
+
+    def __init__(self, spark) -> None:
+        self.spark = spark
+        self.obs: dict = {}
+        self.lines: list = []
+        self.cached: list = []
+
+    def __enter__(self) -> "_ObservedRun":
+        self.prev = self.spark.conf.get(self._RULES, None)
+        self.spark.conf.set(self._RULES, ",".join(filter(None, (self.prev, self._EMPTY))))
+        return self
+
+    def __exit__(self, *exc) -> None:
+        for df in self.cached:
+            df.unpersist()
+        if self.prev is None:
+            self.spark.conf.unset(self._RULES)
+        else:
+            self.spark.conf.set(self._RULES, self.prev)
+
+    def cache(self, df):
+        """Persist a frame with two or more consumers until the run ends."""
+        self.cached.append(df.persist())
+        return self.cached[-1]
+
+    def rows(self, df, name: str, where=None, **more):
+        """``df``, observing its row count ``n`` (of the rows matching
+        ``where``) and any ``more`` named aggregates."""
+        import pyspark.sql.functions as F
+        from pyspark.sql import Observation
+
+        n = F.count(F.lit(1)) if where is None else F.count_if(where)
+        obs = self.obs[name] = Observation(f"corpus_{name}")
+        return df.observe(obs, n.alias("n"), *[c.alias(k) for k, c in more.items()])
+
+    def drop_ids(self, df, name: str, bad):
+        """``df`` minus the rows whose doc_id is in ``bad``; ``run[name]``
+        is the rows observed going in minus the rows coming out."""
+        out = self.rows(df, f"{name}_in").join(bad.select("doc_id"), "doc_id", "left_anti")
+        return self.rows(out, f"{name}_out")
+
+    def __getitem__(self, name: str) -> int:
+        if name in self.obs:
+            return self.obs[name].get["n"]
+        return self[f"{name}_in"] - self[f"{name}_out"]
+
+
+#: split names in the order the accounting line prints them
+_SPLITS = ("train", "val", "test")
+
+
 def cmd_corpus(args: argparse.Namespace) -> int:
     """Training-corpus prep, end to end: JSONL/parquet documents in ->
     PII scrub (optional) -> quality gate -> exact dedup (min-id
@@ -350,19 +416,13 @@ def cmd_corpus(args: argparse.Namespace) -> int:
     JSONL) out, with the corpus accounting printed (read / quarantined
     / gated / unique / per-split). The same composition the
     docs_corpus_prep registry plan verifies against its SQL oracle,
-    wired to real files."""
-    import pyspark.sql.functions as F
+    wired to real files.
 
-    from .operators.dedup import exact_duplicates
-    from .operators.sampling import hash_split
-    from .operators.text import (
-        STOPWORDS,
-        multilingual_stopwords,
-        pii_redact,
-        quality_filter,
-    )
-    from .sources.jsonl import read_jsonl, write_jsonl
-
+    The accounting is observed on the pass the final write makes
+    (:class:`_ObservedRun`); its one action of its own is the JSONL
+    lane's count of unparseable lines, a side branch the write never
+    reads.  Frames cached for their several consumers are released
+    before the command returns."""
     # flag validation BEFORE any Spark work: a bad --lm-order must not
     # cost a full corpus scan before exiting 2
     if args.lm_ref and args.lm_order < 2:
@@ -441,6 +501,41 @@ def cmd_corpus(args: argparse.Namespace) -> int:
         return 2
 
     spark = get_spark("poly-corpus", master=args.master)
+    with _ObservedRun(spark) as run:
+        return _corpus_pipeline(spark, args, run, lm_buckets)
+
+
+def _corpus_pipeline(
+    spark, args: argparse.Namespace, run: _ObservedRun, lm_buckets: list[str]
+) -> int:
+    """The stages of :func:`cmd_corpus`, inside its observed-run scope."""
+    import os
+
+    import pyspark.sql.functions as F
+
+    from .operators.dedup import exact_duplicates
+    from .operators.sampling import hash_split
+    from .operators.text import (
+        STOPWORDS,
+        multilingual_stopwords,
+        pii_redact,
+        quality_filter,
+    )
+    from .operators.urls import join_graph_signals
+    from .sources.jsonl import read_jsonl, write_jsonl
+
+    # crawl lanes are multilingual INCLUDING unsegmented scripts
+    crawl = args.input_format in ("warc", "wet")
+    # archive lanes name their decoded frame and, if not the crawl one,
+    # their projection to (doc_id, text, url, source); the quarantine
+    # tail is shared
+    decoded = bad = None
+    lane_cols = [
+        F.xxhash64("url", "warc_date").alias("doc_id"),
+        "text",
+        "url",
+        F.col("warc_file").alias("source"),
+    ]
     if args.input_format == "warc":
         from .operators.urls import url_dedup
         from .sources.archive import (
@@ -473,7 +568,8 @@ def cmd_corpus(args: argparse.Namespace) -> int:
                     "application/pdf", *OFFICE_CONTENT_TYPES
                 )
             )
-        ).persist()
+        )
+        raw = run.cache(raw)
         # refetches of the same page (tracking params, fragments, case)
         # collapse to the earliest fetch BEFORE any text extraction —
         # the cheap dedup ahead of the expensive content dedup
@@ -497,9 +593,9 @@ def cmd_corpus(args: argparse.Namespace) -> int:
                 recs.filter(~is_robots_url(F.col("url"))),
                 parse_robots(robots_txt),
             )
-            n_robots_blocked = recs.filter(~F.col("crawl_allowed")).count()
+            recs = run.rows(recs, "robots", ~F.col("crawl_allowed"))
             recs = recs.filter(F.col("crawl_allowed")).drop("crawl_allowed")
-            print(f"robots: blocked={n_robots_blocked}")
+            run.lines.append(lambda: f"robots: blocked={run['robots']}")
         html = recs.filter(F.col("content_type").startswith("text/html"))
         if args.meta_robots or args.canonical_dedup:
             # page-LEVEL compliance/canonicalization (an extra parser
@@ -509,11 +605,14 @@ def cmd_corpus(args: argparse.Namespace) -> int:
             # canonical target ahead of content dedup
             from .sources.archive import extract_page_meta
 
-            html = extract_page_meta(html).persist()
+            html = extract_page_meta(html)
+            if args.canonical_dedup:
+                # url_dedup's window and null split both read it
+                html = run.cache(html)
             if args.meta_robots:
-                n_noindex = html.filter(F.col("meta_noindex")).count()
+                html = run.rows(html, "noindex", F.col("meta_noindex"))
                 html = html.filter(~F.coalesce(F.col("meta_noindex"), F.lit(False)))
-                print(f"meta-robots: noindex={n_noindex}")
+                run.lines.append(lambda: f"meta-robots: noindex={run['noindex']}")
             if args.canonical_dedup:
                 html = url_dedup(
                     html.withColumn(
@@ -537,47 +636,15 @@ def cmd_corpus(args: argparse.Namespace) -> int:
         plain = decode_text_members(
             recs.filter(~F.col("content_type").startswith("text/html"))
         )
-        # multi-consumer frame atop a NON-SPLITTABLE decompress+parse
-        # (the mojibake quarantine count AND the doc pipeline both read
-        # it): without this every consumer re-walks every WARC file
-        parsed = (
-            html_to_text(html, main_content=args.main_content)
-            .unionByName(plain, allowMissingColumns=True)
-            .persist()
-        )
-        # decode_ok=false means the declared/sniffed charset lied and
-        # the text carries replacement characters — quarantine it here
-        # instead of letting mojibake poison langid/quality/dedup
-        # (plain-text rows have decode_ok null: pass)
-        n_quarantined = parsed.filter(F.col("decode_ok") == F.lit(False)).count()
-        docs = (
-            parsed.filter(F.col("decode_ok").isNull() | F.col("decode_ok"))
-            .select(
-                F.xxhash64("url", "warc_date").alias("doc_id"),
-                "text",
-                "url",
-                F.col("warc_file").alias("source"),
-            )
-            .filter(F.col("text").isNotNull())
-            .persist()
+        decoded = html_to_text(html, main_content=args.main_content).unionByName(
+            plain, allowMissingColumns=True
         )
     elif args.input_format == "wet":
         # Common Crawl's extracted-text sidecar: conversion records are
         # already plain text, so the pipeline starts at the decode lane
         from .sources.archive import read_wet
 
-        decoded = read_wet(spark, args.src).persist()
-        n_quarantined = decoded.filter(F.col("decode_ok") == F.lit(False)).count()
-        docs = (
-            decoded.filter(F.col("decode_ok").isNull() | F.col("decode_ok"))
-            .select(
-                F.xxhash64("url", "warc_date").alias("doc_id"),
-                "text",
-                "url",
-                F.col("warc_file").alias("source"),
-            )
-            .filter(F.col("text").isNotNull())
-        )
+        decoded = read_wet(spark, args.src)
     elif args.input_format in ("zip", "tar"):
         from .sources.archive import (
             decode_text_members,
@@ -591,23 +658,48 @@ def cmd_corpus(args: argparse.Namespace) -> int:
         # non-UTF-8 members into the gate as replacement-char soup
         decoded = decode_text_members(
             reader(spark, args.src, suffix=args.zip_suffix)
-        ).persist()
-        n_quarantined = decoded.filter(F.col("decode_ok") == F.lit(False)).count()
-        docs = decoded.filter(
-            F.col("decode_ok").isNull() | F.col("decode_ok")
-        ).select(
+        )
+        lane_cols = [
             F.xxhash64("archive", "member").alias("doc_id"),
             F.col("text"),
             F.col("member").alias("url"),
             F.col("archive").alias("source"),
-        )
+        ]
     elif args.src.endswith(".parquet") or args.input_format == "parquet":
         docs = spark.read.parquet(args.src)
-        n_quarantined = 0
     else:
         docs, bad = read_jsonl(spark, args.src)
-        n_quarantined = bad.count()
-    n_read = docs.count()
+    if decoded is not None:
+        # decode_ok=false means the declared/sniffed charset lied and
+        # the text carries replacement characters — quarantine it here
+        # instead of letting mojibake poison langid/quality/dedup
+        # (plain-text rows have decode_ok null: pass)
+        decoded = run.rows(decoded, "quarantined", F.col("decode_ok") == F.lit(False))
+        docs = decoded.filter(
+            F.col("decode_ok").isNull() | F.col("decode_ok")
+        ).select(*lane_cols)
+        if crawl:
+            docs = docs.filter(F.col("text").isNotNull())
+        # the gate scans the corpus twice (its metrics and its bigram
+        # shuffle): without this each scan re-runs the archive decode
+        docs = run.cache(docs)
+
+    # schema-only checks, before any Spark action: the url column
+    # survives every stage below unchanged
+    if "url" not in docs.columns and args.min_trust is not None:
+        print("corpus: --min-trust requires a url column", file=sys.stderr)
+        return 2
+    if "url" not in docs.columns and args.cap_by_rank:
+        print(
+            "corpus: --cap-by-rank requires a url column to join "
+            "pagerank on",
+            file=sys.stderr,
+        )
+        return 2
+    # the unparseable JSONL lines are a side branch the write never
+    # reads: the one count that is its own action
+    n_quarantined = bad.count() if bad is not None else 0
+    docs = run.rows(docs, "read")
 
     if args.redact_pii:
         from .operators.text import PII_RULES
@@ -616,13 +708,11 @@ def cmd_corpus(args: argparse.Namespace) -> int:
         audit_cols = [f"n_{name}" for name, _, _ in PII_RULES] + ["n_redactions"]
         docs = red.drop("text", *audit_cols).withColumnRenamed("redacted", "text")
 
-    # crawl lanes are multilingual INCLUDING unsegmented scripts: token
-    # stages route CJK/Thai docs through character n-grams ('auto'),
-    # while JSONL/parquet corpora keep the word tokenizer to match the
-    # committed oracles (docs_corpus_prep, docs_span_dedup)
-    crawl_tokenizer = (
-        "auto" if args.input_format in ("warc", "wet") else "word"
-    )
+    # token stages route CJK/Thai docs of the crawl lanes through
+    # character n-grams ('auto'), while JSONL/parquet corpora keep the
+    # word tokenizer to match the committed oracles (docs_corpus_prep,
+    # docs_span_dedup)
+    crawl_tokenizer = "auto" if crawl else "word"
 
     if args.line_dedup:
         # CCNet-stage ordering: strip cross-document boilerplate lines
@@ -653,27 +743,23 @@ def cmd_corpus(args: argparse.Namespace) -> int:
     # crawls are multilingual: the English-only stopword signal would
     # reject clean foreign-language pages as gibberish (JSONL/parquet
     # corpora keep the default to match the docs_corpus_prep oracle)
-    gate_words = (
-        multilingual_stopwords()
-        if args.input_format in ("warc", "wet")
-        else STOPWORDS
-    )
     unseg_markers: tuple = ()
-    if args.input_format in ("warc", "wet"):
+    if crawl:
         from .functions.script_families import UNSEGMENTED_FUNCTION_MARKERS
 
         unseg_markers = UNSEGMENTED_FUNCTION_MARKERS
     gated = quality_filter(
         docs,
         keep_cols=passthrough,
-        stopwords=gate_words,
+        stopwords=multilingual_stopwords() if crawl else STOPWORDS,
         unsegmented_markers=unseg_markers,
     )
     # Multi-consumer frame (the dedup-representatives branch AND the
-    # semi-join back) atop the full parse+scrub+gate lineage — persist
-    # it or the whole corpus re-reads once per consumer, exactly the
-    # cost the registry twin docs_corpus_prep pins with its .persist().
-    kept = gated.filter(F.col("keep")).select("doc_id", *passthrough).persist()
+    # semi-join back, plus any scoring gate) atop the full
+    # parse+scrub+gate lineage — persist it or the whole corpus
+    # re-reads once per consumer, exactly the cost the registry twin
+    # docs_corpus_prep pins with its .persist().
+    kept = run.cache(gated.filter(F.col("keep")).select("doc_id", *passthrough))
 
     if args.lm_ref:
         # CCNet's LM stage, after the heuristic gate: score survivors
@@ -681,9 +767,7 @@ def cmd_corpus(args: argparse.Namespace) -> int:
         # drop high-cross-entropy (reference-unlike) pages.  Unscorable
         # docs (< 2 tokens, already past the gate) keep — the LM cannot
         # judge them.  kept is ALREADY persisted above (the scoring pass
-        # must not re-run the parse/scrub/dedup/gate lineage), and the
-        # tiny scores frame (id, n, ce) persists so the accounting count
-        # and the anti-join don't re-run the model joins.
+        # must not re-run the parse/scrub/dedup/gate lineage).
         ref = spark.read.parquet(args.lm_ref)
         if args.lm_order >= 3:
             # order-n stupid backoff (web-scale smoothing); score is
@@ -697,11 +781,9 @@ def cmd_corpus(args: argparse.Namespace) -> int:
             model = ngram_lm_train_counts(
                 ref, order=args.lm_order, tokenizer=crawl_tokenizer
             )
-            scores = (
-                stupid_backoff_score(kept, model, tokenizer=crawl_tokenizer)
-                .withColumnRenamed("avg_neg_logscore", "cross_entropy")
-                .persist()
-            )
+            scores = stupid_backoff_score(
+                kept, model, tokenizer=crawl_tokenizer
+            ).withColumnRenamed("avg_neg_logscore", "cross_entropy")
         else:
             from .operators.ngram_lm import (
                 ngram_lm_cross_entropy,
@@ -711,7 +793,7 @@ def cmd_corpus(args: argparse.Namespace) -> int:
             model = ngram_lm_train(ref, tokenizer=crawl_tokenizer)
             scores = ngram_lm_cross_entropy(
                 kept, model, tokenizer=crawl_tokenizer
-            ).persist()
+            )
         if lm_buckets:
             # CCNet's actual gate shape: keep per-LANGUAGE score
             # terciles, not one absolute threshold — a fixed max_ce
@@ -730,36 +812,21 @@ def cmd_corpus(args: argparse.Namespace) -> int:
             keep_ids = [
                 i + 1 for i, nm in enumerate(_LM_BUCKETS) if nm in lm_buckets
             ]
-            # persist the dropped-ids frame: the accounting count and
-            # the anti-join would otherwise each re-run the lang join +
-            # histogram shuffle + window + join-back over the corpus
-            bad = (
-                score_quantile_buckets(frame, "cross_entropy", by_col=by, k=3)
-                .filter(
-                    F.col("bucket").isNotNull()
-                    & ~F.col("bucket").isin(keep_ids)
-                )
-                .select("doc_id")
-                .persist()
+            bad = score_quantile_buckets(
+                frame, "cross_entropy", by_col=by, k=3
+            ).filter(
+                F.col("bucket").isNotNull() & ~F.col("bucket").isin(keep_ids)
             )
-            n_lm_dropped = bad.count()
-            kept = kept.join(bad.select("doc_id"), "doc_id", "left_anti")
-            print(
-                f"lm-gate: dropped={n_lm_dropped} "
-                f"keep_buckets={','.join(lm_buckets)} order={args.lm_order}"
-            )
+            gate = f"keep_buckets={','.join(lm_buckets)}"
         else:
             max_ce = args.lm_max_ce if args.lm_max_ce is not None else 8.0
             bad = scores.filter(
                 F.col("cross_entropy").isNotNull()
                 & (F.col("cross_entropy") > max_ce)
             )
-            n_lm_dropped = bad.count()
-            kept = kept.join(bad.select("doc_id"), "doc_id", "left_anti")
-            print(
-                f"lm-gate: dropped={n_lm_dropped} max_ce={max_ce} "
-                f"order={args.lm_order}"
-            )
+            gate = f"max_ce={max_ce}"
+        kept = run.drop_ids(kept, "lm", bad)
+        run.lines.append(lambda: f"lm-gate: dropped={run['lm']} {gate} order={args.lm_order}")
 
     if args.clf_good or args.clf_model:
         # the model-based quality filter (GPT-3/CCNet-style): a Naive
@@ -768,9 +835,7 @@ def cmd_corpus(args: argparse.Namespace) -> int:
         # doc is kept only when its good-vs-bad log-odds clears the
         # margin.  Unscorable docs (no tokens — already past the
         # heuristic gate) keep: the classifier cannot judge them,
-        # symmetric with the LM gate.  The tiny scores frame persists
-        # so the accounting count and the anti-join don't re-run the
-        # model joins.
+        # symmetric with the LM gate.
         from .operators.classify import (
             nb_load,
             nb_log_odds,
@@ -794,16 +859,13 @@ def cmd_corpus(args: argparse.Namespace) -> int:
                 F.col(args.clf_text_col).alias("text"),
             )
             model = nb_train(good.unionByName(badref))
-        odds = nb_log_odds(kept, model, "good", "bad").persist()
+        odds = nb_log_odds(kept, model, "good", "bad")
         bad = odds.filter(
             F.col("log_odds").isNotNull()
             & (F.col("log_odds") < args.clf_margin)
         )
-        n_clf_dropped = bad.count()
-        kept = kept.join(bad.select("doc_id"), "doc_id", "left_anti")
-        print(
-            f"clf-gate: dropped={n_clf_dropped} margin={args.clf_margin}"
-        )
+        kept = run.drop_ids(kept, "clf", bad)
+        run.lines.append(lambda: f"clf-gate: dropped={run['clf']} margin={args.clf_margin}")
 
     if args.graph and args.min_trust is not None:
         # graph -> selection: the quality half of the crawl loop.  The
@@ -813,26 +875,19 @@ def cmd_corpus(args: argparse.Namespace) -> int:
         # which under TrustRank semantics are exactly "unreachable from
         # any vetted seed" — drop with accounting.  Non-crawl rows
         # (NULL url) are not trust-scorable and keep.
-        import os as _os
-
-        from .operators.urls import join_graph_signals
-
-        if "url" not in kept.columns:
-            print("corpus: --min-trust requires a url column", file=sys.stderr)
-            return 2
-        trust = spark.read.parquet(_os.path.join(args.graph, "trust")).select(
+        trust = spark.read.parquet(os.path.join(args.graph, "trust")).select(
             "node", "trust"
         )
-        scored = join_graph_signals(kept, trust)
-        bad = scored.filter(
-            F.col("url").isNotNull() & (F.col("trust") < args.min_trust)
+        scored = run.rows(
+            join_graph_signals(kept, trust),
+            "trust",
+            F.col("url").isNotNull() & (F.col("trust") < args.min_trust),
         )
-        n_trust_dropped = bad.count()
         kept = scored.filter(
             F.col("url").isNull() | (F.col("trust") >= args.min_trust)
         ).drop("trust")
-        print(
-            f"trust-gate: dropped={n_trust_dropped} min_trust={args.min_trust}"
+        run.lines.append(
+            lambda: f"trust-gate: dropped={run['trust']} min_trust={args.min_trust}"
         )
 
     dedup_form = "NFC" if args.nfc else None
@@ -860,14 +915,10 @@ def cmd_corpus(args: argparse.Namespace) -> int:
             normalize_form=dedup_form,
         )
         clusters = duplicate_clusters(near_pairs)
-        dupes = clusters.filter(
-            F.col("doc_id") != F.col("cluster_id")
-        ).select("doc_id")
-        n_fuzzy = dupes.count()
-        unique = unique.join(dupes, "doc_id", "left_anti")
-        print(
-            f"fuzzy-dedup: dropped={n_fuzzy} "
-            f"threshold={args.fuzzy_dedup}"
+        dupes = clusters.filter(F.col("doc_id") != F.col("cluster_id"))
+        unique = run.drop_ids(unique, "fuzzy", dupes)
+        run.lines.append(
+            lambda: f"fuzzy-dedup: dropped={run['fuzzy']} threshold={args.fuzzy_dedup}"
         )
 
     if args.domain_cap:
@@ -891,24 +942,13 @@ def cmd_corpus(args: argparse.Namespace) -> int:
         if "source" in unique.columns:
             parts.append(F.col("source"))
         dom = F.coalesce(*parts, F.lit("__all__"))
-        if args.cap_by_rank and "url" not in unique.columns:
-            print(
-                "corpus: --cap-by-rank requires a url column to join "
-                "pagerank on",
-                file=sys.stderr,
-            )
-            return 2
         if args.cap_by_rank:
             # centrality-weighted cap: each domain keeps its HIGHEST-
             # pagerank pages (webgraph pagerank/ joined by normalized
             # URL) instead of a hash-random subset — the second half of
             # the graph -> selection loop
-            import os as _os
-
-            from .operators.urls import join_graph_signals
-
             rank = spark.read.parquet(
-                _os.path.join(args.graph, "pagerank")
+                os.path.join(args.graph, "pagerank")
             ).select("node", "rank")
             unique = join_graph_signals(unique, rank, value_cols=("rank",))
             unique = group_capped_sample(
@@ -922,17 +962,23 @@ def cmd_corpus(args: argparse.Namespace) -> int:
                 unique.withColumn("_dom", dom), cap=args.domain_cap, group_col="_dom"
             ).drop("_dom")
 
-    out = hash_split(unique).persist()
-    n_unique = out.count()
-    split_counts = {r["split"]: r["n"] for r in out.groupBy("split").agg(F.count("*").alias("n")).collect()}
-
+    out = run.rows(
+        hash_split(unique),
+        "out",
+        **{s: F.count_if(F.col("split") == s) for s in _SPLITS},
+    )
     if args.format == "jsonl":
         write_jsonl(out, args.out, target_partitions=args.partitions)
     else:
         out.write.mode("overwrite").partitionBy("split").parquet(args.out)
+    for render in run.lines:
+        print(render())
+    if decoded is not None:
+        n_quarantined = run["quarantined"]
+    splits = {s: n for s in _SPLITS if (n := run.obs["out"].get[s])}
     print(
-        f"corpus -> {args.out}: read={n_read} quarantined={n_quarantined} "
-        f"unique_kept={n_unique} splits={split_counts}"
+        f"corpus -> {args.out}: read={run['read']} quarantined={n_quarantined} "
+        f"unique_kept={run['out']} splits={splits}"
     )
     return 0
 

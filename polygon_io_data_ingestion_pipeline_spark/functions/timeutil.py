@@ -33,15 +33,6 @@ def epoch_to_timestamp(col: str) -> Column:
     )
 
 
-def parse_any_timestamp(col: str) -> Column:
-    """Epoch (any unit) or ISO-8601 string -> UTC timestamp, null on
-    garbage (mirrors ``pd.to_datetime(errors='coerce')``, ingest.py:170)."""
-    return (
-        F.when(F.col(col).cast("string").rlike("^-?[0-9]+$"), epoch_to_timestamp(col))
-        .otherwise(F.expr(f"try_to_timestamp(CAST({col} AS STRING))"))
-    )
-
-
 def eastern_wall_clock(ts: Column | str) -> Column:
     """US/Eastern wall-clock rendering of a UTC instant (ingest.py:268)."""
     c = F.col(ts) if isinstance(ts, str) else ts

@@ -314,13 +314,3 @@ def extract_pptx_text(data: bytes) -> str:
     masters are chrome and skipped.  Raises :class:`OfficeFormatError`
     on a corrupt container or XML."""
     return _extract_via("pptx", data)
-
-
-def extract_office_text(data: bytes) -> str:
-    """Sniff-and-extract in one open; raises :class:`OfficeFormatError`
-    when the payload is not a recognizable Office document (callers
-    that need fall-through semantics use :func:`try_extract_office`)."""
-    got = try_extract_office(data)
-    if got is None:
-        raise OfficeFormatError("not a DOCX/PPTX/ODT container")
-    return got[1]

@@ -184,10 +184,6 @@ def _nullsafe_join(left: DataFrame, right: DataFrame, keys: list[str], how: str 
     return left.join(r, cond, how).drop(*[f"__r_{k}" for k in keys])
 
 
-def _topk_cell_schema() -> str:
-    return "struct<items: array<struct<item: string, cnt: bigint>>, err: bigint>"
-
-
 def _empty_topk_cell():
     return F.struct(
         F.expr("CAST(array() AS array<struct<item: string, cnt: bigint>>)").alias(

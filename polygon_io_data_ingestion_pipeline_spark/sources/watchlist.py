@@ -12,8 +12,6 @@ from __future__ import annotations
 import json
 from pathlib import Path
 
-from ..functions.tickers import ticker_variants
-
 
 def load_watchlist(path: str | Path) -> set[str]:
     """JSON array or one-symbol-per-line text -> uppercased set."""
@@ -82,8 +80,3 @@ def scrape_index_universe(html_path: str | Path, symbol_header: str = "Symbol") 
 def union_universes(*universes: set[str]) -> list[str]:
     """SPX ∪ NDX-style union, order-stable (build_index_universes.py:47)."""
     return sorted(set().union(*universes))
-
-
-def expand_variants(symbols: set[str]) -> dict[str, list[str]]:
-    """symbol -> REST lookup candidates (run_pullers.py:38-63)."""
-    return {s: ticker_variants(s) for s in sorted(symbols)}

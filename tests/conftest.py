@@ -37,7 +37,6 @@ def sf_dir():
 SLOW_MODULES = {
     # round-14 additions: measured multi-minute / multi-action modules
     "test_classify",
-    "test_corpus_cli",
     "test_datasheet",
     "test_decorrelation",
     "test_dedup_clusters",

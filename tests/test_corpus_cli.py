@@ -738,11 +738,24 @@ def test_corpus_cli_cap_by_rank_requires_url_column(spark, tmp_path, capsys):
         [(1, words, "s")], "doc_id long, text string, source string"
     ).write.parquet(src)
     wg = str(tmp_path / "wg")  # never read: the guard fires first
-    assert main([
-        "corpus", "--src", src, "--out", str(tmp_path / "o"),
-        "--graph", wg, "--domain-cap", "2", "--cap-by-rank",
-        "--master", "local[4]",
-    ]) == 2
+    # the guard is schema-only: the command launches no more jobs than
+    # reading the source's schema does, so no gate or dedup job ran
+    sc = spark.sparkContext
+    sc.setJobGroup("url-guard-schema", "schema read")
+    spark.read.parquet(src).columns
+    sc.setJobGroup("url-guard-corpus", "corpus")
+    try:
+        assert main([
+            "corpus", "--src", src, "--out", str(tmp_path / "o"),
+            "--graph", wg, "--domain-cap", "2", "--cap-by-rank",
+            "--master", "local[4]",
+        ]) == 2
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    assert len(tracker.getJobIdsForGroup("url-guard-corpus")) <= len(
+        tracker.getJobIdsForGroup("url-guard-schema")
+    )
 
 
 def test_corpus_cli_clf_gate(spark, tmp_path, capsys):
@@ -1111,3 +1124,102 @@ def test_corpus_cli_shingle_tokenizer_runs(spark, tmp_path, capsys):
     assert rc == 0
     kept = sorted(r["doc_id"] for r in spark.read.parquet(out2).collect())
     assert kept == [1, 3]  # typo collapsed, replacement kept
+
+
+def _corpus_line(printed):
+    """The accounting line's figures, without the output path."""
+    line = next(ln for ln in printed.splitlines() if ln.startswith("corpus -> "))
+    return line.split(": ", 1)[1]
+
+
+def _write_docs(path, n):
+    """A parquet corpus of ``n`` gate-passing documents, written in place
+    by a writer other than Spark (so no Spark cache hears of it)."""
+    import pandas as pd
+
+    pd.DataFrame({
+        "doc_id": range(n),
+        "text": [f"{GOOD} marker{i}" for i in range(n)],
+        "source": "s",
+    }).to_parquet(path)
+
+
+def test_corpus_cli_rerun_after_source_overwrite(spark, tmp_path, capsys):
+    """A second run in the same session, after the source was overwritten
+    in place, accounts and writes exactly what a first run on the new
+    source does: nothing is served from the earlier run's frames."""
+    src, out = str(tmp_path / "docs.parquet"), str(tmp_path / "out")
+    _write_docs(src, 8)
+    assert main(["corpus", "--src", src, "--out", out]) == 0
+    assert _corpus_line(capsys.readouterr().out).startswith(
+        "read=8 quarantined=0 unique_kept=8 "
+    )
+
+    _write_docs(src, 3)
+    assert main(["corpus", "--src", src, "--out", out]) == 0
+    rerun = _corpus_line(capsys.readouterr().out)
+    rerun_rows = sorted(map(tuple, spark.read.parquet(out).collect()))
+
+    fresh_src, fresh_out = str(tmp_path / "fresh.parquet"), str(tmp_path / "fresh")
+    _write_docs(fresh_src, 3)
+    assert main(["corpus", "--src", fresh_src, "--out", fresh_out]) == 0
+    assert rerun == _corpus_line(capsys.readouterr().out)
+    assert rerun.startswith("read=3 quarantined=0 unique_kept=3 ")
+    assert rerun_rows == sorted(map(tuple, spark.read.parquet(fresh_out).collect()))
+
+
+def test_corpus_cli_releases_its_caches(spark, tmp_path, capsys):
+    """Every frame the command caches is released before it returns, on
+    the parquet lane (the gated frame) and on an archive lane (the
+    decoded documents too)."""
+    import io as _io
+    import zipfile as _zipfile
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    src = str(tmp_path / "docs.parquet")
+    _write_docs(src, 4)
+    buf = _io.BytesIO()
+    with _zipfile.ZipFile(buf, "w") as zf:
+        zf.writestr("a.txt", GOOD)
+        zf.writestr("b.txt", GOOD_B2)
+    zdir = tmp_path / "zips"
+    zdir.mkdir()
+    (zdir / "bundle.zip").write_bytes(buf.getvalue())
+
+    spark.catalog.clearCache()
+    for argv in (
+        ["--src", src, "--line-dedup", "--fuzzy-dedup", "0.8"],
+        ["--src", str(zdir), "--input-format", "zip"],
+    ):
+        assert main(["corpus", *argv, "--out", str(tmp_path / "out")]) == 0
+        assert cache.isEmpty(), argv
+    assert "read=2 quarantined=0 unique_kept=2 " in capsys.readouterr().out
+
+
+def test_corpus_cli_everything_gated_with_fuzzy_dedup(spark, tmp_path, capsys):
+    """A corpus whose every document fails the gate still completes with
+    fuzzy dedup on: the empty frames above the gate must not swallow the
+    observed read count, and no observation may wait forever.  The run
+    goes in a thread so a hang fails the test instead of the suite."""
+    import threading
+
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "docs.jsonl").write_text(
+        "\n".join(_line(i, f"short junk {i}") for i in range(3)) + "\n"
+    )
+    result = {}
+    worker = threading.Thread(
+        target=lambda: result.update(rc=main([
+            "corpus", "--src", str(src), "--out", str(tmp_path / "out"),
+            "--fuzzy-dedup", "0.5",
+        ])),
+        daemon=True,
+    )
+    worker.start()
+    worker.join(timeout=600)
+    assert not worker.is_alive(), "corpus run did not finish"
+    assert result == {"rc": 0}
+    msg = capsys.readouterr().out
+    assert "fuzzy-dedup: dropped=0 threshold=0.5" in msg
+    assert _corpus_line(msg) == "read=3 quarantined=0 unique_kept=0 splits={}"
