@@ -1290,10 +1290,10 @@ def _ivf_query_state(
     # build that died at any earlier point leaves no sidecar and is
     # rewritten. Deliberately NOT gated on Spark's _SUCCESS marker:
     # whether that file appears depends on session committer config
-    # (dynamic partitionOverwriteMode — which sources/lake.py enables —
-    # omits it), and requiring it made every reuse probe in such
-    # sessions silently rebuild the index (caught by
-    # tests/test_ivf_rebuild_signature.py in the full suite).
+    # (a session-wide dynamic partitionOverwriteMode omits it), and
+    # requiring it made every reuse probe in such sessions silently
+    # rebuild the index (caught by tests/test_ivf_rebuild_signature.py
+    # in the full suite).
     if os.path.exists(os.path.join(idx, "_codebook.json")):
         cents = SIM.read_ivf_codebook(idx)
     else:

@@ -34,8 +34,6 @@ def write_lake(df: DataFrame, path: str, tf: str = "day", mode: str = "overwrite
     """Write bars as a partitioned zstd parquet lake, one sorted file
     per partition."""
     keys = PARTITION_KEYS[tf]
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     # Partition keys lead the sort: FileFormatWriter requires its input
     # ordered by the partition columns and would otherwise insert its
     # own (non-stable) sort, destroying the in-file datetime order.
@@ -43,13 +41,14 @@ def write_lake(df: DataFrame, path: str, tf: str = "day", mode: str = "overwrite
         df.repartition(*[F.col(k) for k in keys])
         .sortWithinPartitions(*[F.col(k) for k in keys], "datetime")
         .write.partitionBy(*keys)
+        .option("partitionOverwriteMode", "dynamic")
         .option("compression", "zstd")
         .mode(mode)
         .parquet(path)
     )
     # Overwrites replace files in place; drop any cached listing of the
     # target so readers in this session don't chase deleted files.
-    spark.catalog.refreshByPath(path)
+    df.sparkSession.catalog.refreshByPath(path)
 
 
 def read_lake(
@@ -205,12 +204,12 @@ def compact_lake(
             this = c if this is None else (this & c)
         cond = this if cond is None else (cond | this)
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     (
         df.filter(cond)
         .repartition(*[F.col(k) for k in keys])
         .sortWithinPartitions(*[F.col(k) for k in keys], "datetime")
         .write.partitionBy(*keys)
+        .option("partitionOverwriteMode", "dynamic")
         .option("compression", "zstd")
         .option("maxRecordsPerFile", max_records_per_file)
         .mode("overwrite")

@@ -144,7 +144,7 @@ def backfill_split_windows(
     dividends: DataFrame,
     new_splits: DataFrame,
     window_days: int = 14,
-    **adjust_kwargs,
+    materialize: str = "ohlc",
 ) -> DataFrame:
     """Recompute adjusted bars only for tickers with new split events —
     the reference's ±window backfill job (emit_split_backfill_cmds.py).
@@ -163,7 +163,7 @@ def backfill_split_windows(
     )
     affected = ev.select("ticker").distinct()
     scoped = bars.join(F.broadcast(affected), "ticker", "left_semi")
-    adjusted = adjust_bars(scoped, security_master, splits, dividends, **adjust_kwargs)
+    adjusted = adjust_bars(scoped, security_master, splits, dividends, materialize)
     in_window = adjusted.join(
         F.broadcast(ev),
         (adjusted["ticker"] == ev["ticker"])

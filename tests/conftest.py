@@ -82,7 +82,6 @@ SLOW_MODULES = {
     "test_pdf_hash2b_restatement",
     "test_archive_sources",
     "test_ivf_rebuild_signature",
-    "test_dividend_factor_agg",
     "test_crawl_stream",
     # pre-round-14 set
     "test_oracle_parity",
@@ -94,7 +93,6 @@ SLOW_MODULES = {
     "test_neardup_recall",
     "test_knn_join_recall",
     "test_minute_path",
-    "test_series_cli",
     "test_zorder_lake",
     "test_diff_property",
     "test_merge_property",
@@ -110,7 +108,6 @@ SLOW_MODULES = {
     "test_corpus_stream",
     "test_corpus_exact_history",
     "test_corpus_index_stream",
-    "test_ingest_lake",
     "test_compact_lake",
     "test_rollup_stream",
     "test_corpus_neardup_stream",

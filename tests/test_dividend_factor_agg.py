@@ -1,30 +1,28 @@
-"""build_dividend_factors' end-of-day aggregate: two-level hash shape.
+"""The day calendar's end-of-day aggregate: two-level hash shape.
 
 ``first(ticker)`` in an aggregation BUFFER is a string Spark cannot
 hash-aggregate — the whole full-bar pass would fall back to
 SortAggregate (a sort of every scanned partition before the partial
-agg; spill-prone at 100 TB).  The operator therefore keeps ticker as a
-LEVEL-1 GROUP KEY (keys may be strings) and resolves the per-day pick
-at level 2 over the calendar-sized frame — the same shape
-``day_calendar`` adopted in round 13.  These tests pin (a) the plan:
-no SortAggregate anywhere in the operator's lineage, and (b) value
-equality with the direct one-level formulation on a multi-day fixture
-with dividends, a same-day dividend pair, and an id with no events.
+agg; spill-prone at 100 TB).  ``day_calendar`` therefore keeps ticker
+as a LEVEL-1 GROUP KEY (keys may be strings) and resolves the per-day
+pick at level 2 over the calendar-sized frame.  These tests pin (a) the
+plan: in ``adjust_bars``' lineage every SortAggregate sits above a
+HashAggregate, never directly over the bar scan, and (b) value equality
+of ``day_calendar`` with the direct one-level formulation on a
+multi-day fixture with two bars per day.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import re
 
 import pytest
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from polygon_io_data_ingestion_pipeline_spark.operators.factors import (
-    build_dividend_factors,
-    cumprod,
-    normalize_to_last,
-    prep_dividends,
+    adjust_bars,
+    day_calendar,
 )
 
 D = dt.datetime.fromisoformat
@@ -70,18 +68,38 @@ def dividends(spark):
 
 
 def test_no_sort_aggregate_in_plan(spark, bars_split, dividends):
-    # The operator's own plan reads the localCheckpoint-materialized
-    # calendar: no SortAggregate anywhere downstream, and the bar table
-    # never re-enters the lineage (the lazy-checkpoint fix: without it
-    # the event-routing leg re-derived a first(ticker)-over-scan
-    # SortAggregate from the bars THREE times via _events_for_ids).
-    plan = (
-        build_dividend_factors(bars_split, prep_dividends(dividends))
+    # Every SortAggregate in adjust_bars' plan (the only one is the
+    # calendar's level-2 first(ticker)) must have a HashAggregate
+    # between it and the bar scan: the full-bar pass is hash-shaped.
+    sm = spark.createDataFrame(
+        [("AAA", "FIGI_AAA", D("2023-01-01T00:00:00"), None)],
+        "ticker string, composite_figi string, effective_start timestamp, "
+        "effective_end timestamp",
+    )
+    splits = spark.createDataFrame(
+        [], "ticker string, composite_figi string, execution_date timestamp, ratio double"
+    )
+    bars = bars_split.select("datetime", "ticker", "close", "volume")
+    lines = (
+        adjust_bars(bars, sm, splits, dividends)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
+        .splitlines()
     )
-    assert "SortAggregate" not in plan, plan
+    depth = [len(re.match(r"[ :+\-]*", l).group(0)) for l in lines]
+    scans = [j for j, l in enumerate(lines) if "Scan" in l and "close#" in l]
+    assert scans, "\n".join(lines)
+    for j in scans:
+        # ancestors of the scan, nearest first
+        path, d = [], depth[j]
+        for k in range(j - 1, -1, -1):
+            if depth[k] < d:
+                path.append(lines[k][depth[k]:])
+                d = depth[k]
+        for a, op in enumerate(path):
+            if op.startswith("SortAggregate"):
+                assert any(x.startswith("HashAggregate") for x in path[:a]), "\n".join(lines)
 
 
 def test_calendar_full_bar_pass_is_hash_shaped(spark, bars_split):
@@ -89,10 +107,6 @@ def test_calendar_full_bar_pass_is_hash_shaped(spark, bars_split):
     # partial-combining HashAggregate; the unavoidable first(ticker)
     # SortAggregate may only appear ABOVE it (calendar-sized, after the
     # level-1 exchange), never directly over the bar scan.
-    from polygon_io_data_ingestion_pipeline_spark.operators.factors import (
-        day_calendar,
-    )
-
     lines = (
         day_calendar(bars_split.withColumn("close", F.col("close_split")))
         ._jdf.queryExecution()
@@ -113,53 +127,25 @@ def test_calendar_full_bar_pass_is_hash_shaped(spark, bars_split):
             assert hash_i < scan_i, "\n".join(lines)
 
 
-def test_matches_one_level_formulation(spark, bars_split, dividends):
+def test_matches_one_level_formulation(spark, bars_split):
+    key = ("id", "event_day")
     got = {
-        (r["id"], r["event_day"]): r["tr_price_factor"]
-        for r in build_dividend_factors(
-            bars_split, prep_dividends(dividends)
-        ).collect()
+        tuple(r[k] for k in key): (r["close_eod"], r["ticker"])
+        for r in day_calendar(bars_split).collect()
     }
-
     # the pre-round-14 one-level formulation, inlined
-    from polygon_io_data_ingestion_pipeline_spark.operators.factors import (
-        _align_forward,
-        _events_for_ids,
-    )
-
-    wday = Window.partitionBy("id").orderBy("event_day")
-    cal = (
-        bars_split.groupBy("id", "event_day")
+    want = {
+        tuple(r[k] for k in key): (r["close_eod"], r["ticker"])
+        for r in bars_split.groupBy(*key)
         .agg(
-            F.max_by("close_split", "datetime").alias("base"),
+            F.max_by("close", "datetime").alias("close_eod"),
             F.first("ticker", ignorenulls=True).alias("ticker"),
         )
-        .withColumn("prior_base", F.lag("base").over(wday))
-    )
-    dv = prep_dividends(dividends)
-    ev = _events_for_ids(cal.select("id", "ticker").distinct(), dv, "ex_date", "amount")
-    aligned = _align_forward(ev, cal.select("id", "event_day"), "ex_date", "amount")
-    per_day = aligned.groupBy("id", "event_day").agg(F.sum("amount").alias("amount"))
-    t = cal.join(per_day, ["id", "event_day"], "left")
-    g = F.when(
-        F.col("amount").isNotNull()
-        & F.col("prior_base").isNotNull()
-        & (F.col("prior_base") > 0),
-        (F.col("prior_base") - F.col("amount")) / F.col("prior_base"),
-    ).otherwise(F.lit(1.0))
-    t = t.withColumn("G", cumprod(g, wday))
-    want = {
-        (r["id"], r["event_day"]): r["trf"]
-        for r in t.select(
-            "id", "event_day", normalize_to_last(F.col("G"), wday).alias("trf")
-        ).collect()
+        .collect()
     }
-
-    assert set(got) == set(want)
-    for k in got:
-        assert got[k] == want[k], (k, got[k], want[k])
-    # sanity: the dividend actually moved AAA's factors, BBB untouched
-    aaa = [v for (gid, _), v in got.items() if gid == "FIGI_AAA"]
-    bbb = [v for (gid, _), v in got.items() if gid == "NOFIGI__BBB"]
-    assert any(v != 1.0 for v in aaa)
-    assert all(v == 1.0 for v in bbb)
+    assert got == want
+    assert len(got) == 8
+    # the last bar of each day (minute 45) supplies the end-of-day close
+    for (_, day), (close_eod, _) in got.items():
+        d_i = (day - dt.date(2024, 1, 2)).days
+        assert close_eod == 100.0 + d_i + 0.45

@@ -1,35 +1,25 @@
 """Hot-key evidence for the factor engine: one security holding ~50%
 of all bars must neither change results nor force a single-task
-full-corpus window.
+full-corpus shuffle.
 
-At 100 TB the adjust pipeline's per-id windows only ever run on
-day-calendar/event-sized tables (small); the sole full-bar-table
-computation keyed by the bare id is the batch re-anchor, which is why
-it is aggregation-shaped (map-side combine absorbs the hot key) rather
-than window-shaped. These tests pin (a) result equality between the
-aggregation shape and the reference window formulation on a skewed
-fixture, (b) end-to-end adjust correctness under skew, and (c) the
-plan shape: partial HashAggregate + broadcast join-back, no Window
-over the bar lineage keyed by id alone.
+At 100 TB the adjust pipeline's per-id windows only ever run on the
+persisted day calendar (small); the bar table itself is shuffled only
+on keys that spread a hot security over many tasks. These tests pin
+(a) end-to-end adjust correctness under skew and (b) that plan shape:
+every exchange of bar rows is keyed by (ticker, datetime) or
+(id, event_day[, ticker]), and every exchange keyed by the bare id
+reads the persisted calendar, never the bars.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import re
 
 import pytest
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from polygon_io_data_ingestion_pipeline_spark.operators.factors import (
-    adjust_bars,
-    id_renorm_factors,
-    renormalize_tr,
-)
-
-BARS_SCHEMA = (
-    "datetime timestamp, ticker string, id long, close double, volume double"
-)
+from polygon_io_data_ingestion_pipeline_spark.operators.factors import adjust_bars
 
 
 @pytest.fixture(scope="module")
@@ -56,72 +46,10 @@ def skewed_bars(spark):
     return hot.unionByName(cold).localCheckpoint()
 
 
-def _with_tr(bars):
-    """Minimal bars_tr frame: a fake tr factor column to re-anchor."""
-    return bars.withColumn("tr_price_factor", 1.0 + (F.col("id") % 3) / 10.0).withColumn(
-        "close_tr", F.col("close") * F.col("tr_price_factor")
-    )
-
-
-def test_renormalize_agg_equals_window_formulation(spark, skewed_bars):
-    """The aggregation-shaped re-anchor must reproduce the reference
-    window formulation exactly on the skewed fixture."""
-    bars_tr = _with_tr(skewed_bars)
-
-    got = renormalize_tr(bars_tr, use_split_base=False)
-
-    w = Window.partitionBy("id").orderBy("datetime").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    renorm = F.last("close_tr").over(w) / F.last("close").over(w)
-    renorm = F.when(renorm.isNull() | (renorm == 0), F.lit(1.0)).otherwise(renorm)
-    want = bars_tr.withColumn(
-        "tr_price_factor", F.col("tr_price_factor") / renorm
-    ).withColumn("close_tr", F.col("close") * F.col("tr_price_factor"))
-
-    cols = ["id", "datetime", "tr_price_factor", "close_tr"]
-    a = {(r["id"], r["datetime"]): (r["tr_price_factor"], r["close_tr"]) for r in got.select(cols).collect()}
-    b = {(r["id"], r["datetime"]): (r["tr_price_factor"], r["close_tr"]) for r in want.select(cols).collect()}
-    assert set(a) == set(b)
-    for k in a:
-        assert a[k][0] == pytest.approx(b[k][0], abs=1e-12)
-        assert a[k][1] == pytest.approx(b[k][1], abs=1e-9)
-    # the anchor: every id's final close_tr equals its final close
-    finals = got.groupBy("id").agg(
-        F.max_by("close_tr", "datetime").alias("tr"),
-        F.max_by("close", "datetime").alias("base"),
-    )
-    for r in finals.collect():
-        assert r["tr"] == pytest.approx(r["base"], rel=1e-12)
-
-
-def test_renorm_plan_is_partial_agg_not_window(spark, skewed_bars):
-    """Plan shape: the per-id anchors come from a HashAggregate with a
-    partial_ mode (map-side combine — the skew absorber) and NO Window
-    operator anywhere in that lineage."""
-    bars_tr = _with_tr(skewed_bars)
-    plan = (
-        id_renorm_factors(bars_tr, "close")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "partial_max_by" in plan or "partial" in plan.lower(), plan
-    assert "Window" not in plan, plan
-    # and the full renormalize joins the tiny frame back as a broadcast
-    full_plan = (
-        renormalize_tr(bars_tr, use_split_base=False)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BroadcastHashJoin" in full_plan, full_plan
-    assert "Window" not in full_plan, full_plan
-
-
-def test_adjust_bars_correct_under_hot_key(spark, skewed_bars):
-    """End-to-end adjust on the skewed fixture: the hot ticker's split
-    applies exactly as on a balanced corpus."""
+@pytest.fixture(scope="module")
+def refdata(spark):
+    """(security master, splits, dividends): one FIGI per ticker, a 2:1
+    split of the hot ticker on its second day, no dividends."""
     tickers = ["HOT"] + [f"C{i}" for i in range(39)]
     sm = spark.createDataFrame(
         [(t, f"FIGI_{t}", dt.datetime(2023, 1, 1), None) for t in tickers],
@@ -137,14 +65,13 @@ def test_adjust_bars_correct_under_hot_key(spark, skewed_bars):
         [],
         "ticker string, composite_figi string, ex_date timestamp, cash_amount double",
     )
-    out = adjust_bars(
-        skewed_bars.drop("id"),
-        sm,
-        splits,
-        dividends,
-        materialize="close",
-        persist_intermediates=False,
-    ).collect()
+    return sm, splits, dividends
+
+
+def test_adjust_bars_correct_under_hot_key(spark, skewed_bars, refdata):
+    """End-to-end adjust on the skewed fixture: the hot ticker's split
+    applies exactly as on a balanced corpus."""
+    out = adjust_bars(skewed_bars.drop("id"), *refdata, materialize="close").collect()
     hot = [r for r in out if r["ticker"] == "HOT"]
     cold = [r for r in out if r["ticker"] != "HOT"]
     assert len(hot) == 2000 and len(cold) == 2000
@@ -156,3 +83,65 @@ def test_adjust_bars_correct_under_hot_key(spark, skewed_bars):
         assert r["close_split"] == pytest.approx(want, rel=1e-12), r
     for r in cold[:100]:
         assert r["close_split"] == pytest.approx(r["close"], rel=1e-12)
+
+
+def _plan_tree(plan: str) -> list[tuple[int, str]]:
+    """(depth, operator text) per line of a Spark plan tree string."""
+    out = []
+    for line in plan.splitlines():
+        prefix = re.match(r"[ :+\-]*", line).group(0)
+        out.append((len(prefix), line[len(prefix):]))
+    return out
+
+
+def _visible(tree, i):
+    """Indices of the lines under tree[i], minus the cached subplan an
+    InMemoryTableScan prints below itself (that plan ran once, when the
+    cache filled; the scan reads the cached rows)."""
+    depth, out, skip_below = tree[i][0], [], None
+    for j in range(i + 1, len(tree)):
+        d, text = tree[j]
+        if d <= depth:
+            break
+        if skip_below is not None and d > skip_below:
+            continue
+        skip_below = d if text.startswith("InMemoryTableScan") else None
+        out.append(j)
+    return out
+
+
+def test_adjust_bars_plan_shuffles_bars_only_on_spread_keys(spark, skewed_bars, refdata):
+    """Plan shape under the hot key: bar rows cross the network only on
+    (ticker, datetime) (the id stitch's keep-last) and (id, event_day
+    [, ticker]) (calendar aggregate, factor join); every exchange keyed
+    on id alone — the windows a 50% id would pile into one task — reads
+    the persisted calendar."""
+    plan = (
+        adjust_bars(skewed_bars.drop("id"), *refdata, materialize="close")
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    tree = _plan_tree(plan)
+    # bars are the only leaf with a close column; the refdata leaves have none
+    is_bar_scan = lambda t: t.startswith("Scan") and "close#" in t  # noqa: E731
+    bar_keys, id_only = set(), 0
+    for i in _visible(tree, 0):
+        m = re.match(r"Exchange hashpartitioning\((.*), \d+\)", tree[i][1])
+        if not m:
+            continue
+        keys = tuple(re.sub(r"#\d+L?", "", k).strip() for k in m.group(1).split(","))
+        below = [tree[j][1] for j in _visible(tree, i)]
+        if any(is_bar_scan(t) for t in below):
+            bar_keys.add(keys)
+        if keys == ("id",):
+            id_only += 1
+            assert not any(is_bar_scan(t) for t in below), plan
+            assert any(t.startswith("InMemoryTableScan") for t in below), plan
+    assert id_only > 0, plan
+    assert bar_keys, plan
+    assert bar_keys <= {
+        ("ticker", "datetime"),
+        ("id", "event_day"),
+        ("id", "event_day", "ticker"),
+    }, (bar_keys, plan)

@@ -83,6 +83,10 @@ def test_batch_ingest_roundtrip(spark, tmp_path):
     # date-only end bound is inclusive through end of day
     incl = read_lake(spark, lake, tickers=["MSFT"], start="2024-01-05", end="2024-01-05")
     assert incl.count() == 1
+    # column select is wanted ∩ available, in the requested order
+    cols = read_lake(spark, lake, columns=["close", "not_a_column", "ticker", "vwap"])
+    assert cols.columns == ["close", "ticker", "vwap"]
+    assert cols.count() == back.count() == 8
 
     # idempotent re-ingest: same input overwrites same partitions
     n_before = back.count()
@@ -94,22 +98,32 @@ def test_batch_ingest_roundtrip(spark, tmp_path):
     assert all(r["start"] <= r["end"] for r in mani)
 
 
-def test_distributed_lines_mode_matches_native_scan(spark, tmp_path):
-    """O(groups)-driver-memory mode: executor-side line streaming +
-    JVM from_csv parse must produce exactly the native per-group scan's
-    rows (mixed headers, mixed epoch units)."""
-    src = str(tmp_path / "src")
+def test_write_lake_leaves_session_overwrite_mode_alone(spark, tmp_path):
+    """write_lake's dynamic overwrite is a per-writer option: the
+    session's partitionOverwriteMode is unchanged after the call, so a
+    later static partitioned overwrite in the same session still
+    replaces the whole directory (a session-wide dynamic mode would
+    keep its stale ``split=test`` partition)."""
+    src, lake, out = str(tmp_path / "src"), str(tmp_path / "lake"), str(tmp_path / "out")
     _write_flatfiles(src)
-    pat = f"{src}/*/*/*.csv.gz"
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        write_lake(read_bar_flatfiles(spark, f"{src}/*/*/*.csv.gz", tf="day"), lake, tf="day")
+        assert spark.conf.get(key) == "static"
 
-    native = read_bar_flatfiles(spark, pat, tf="day").collect()
-    dist = read_bar_flatfiles(spark, pat, tf="day", distributed_lines=True).collect()
-
-    key = lambda r: (r["ticker"], r["datetime"])  # noqa: E731
-    assert sorted(map(tuple, dist), key=lambda t: (t[0], t[1])) == sorted(
-        map(tuple, native), key=lambda t: (t[0], t[1])
-    )
-    assert len({key(r) for r in native}) == len(native)
+        spark.createDataFrame([(1, "train"), (2, "test")], "doc_id int, split string").write.mode(
+            "overwrite"
+        ).partitionBy("split").parquet(out)
+        spark.createDataFrame([(3, "train")], "doc_id int, split string").write.mode(
+            "overwrite"
+        ).partitionBy("split").parquet(out)
+        spark.catalog.refreshByPath(out)
+        assert [r["doc_id"] for r in spark.read.parquet(out).collect()] == [3]
+        assert not os.path.exists(f"{out}/split=test")
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_missing_path_raises(spark, tmp_path):

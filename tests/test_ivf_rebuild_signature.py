@@ -60,8 +60,8 @@ def test_statsig_tracks_mtime(corpus_dir):
 
 
 def test_changed_corpus_builds_new_index(spark, corpus_dir):
-    # Run under dynamic partition-overwrite, the committer config the
-    # lake writers enable on the shared session: it omits the parquet
+    # Run under a session-wide dynamic partition-overwrite, a committer
+    # config any caller may set on a shared session: it omits the parquet
     # _SUCCESS marker, which the reuse gate therefore must not consult
     # (it keys on the LAST-written sidecar instead — gating on _SUCCESS
     # made every reuse probe in such sessions silently rebuild).
